@@ -15,7 +15,9 @@ Flags (optional, any order after the positional args):
         augmentation (the reference's production per-novel mode,
         correct_ocr.py:210-229); default bounds 2,250
   --auto-skew[=THRESHOLD]  route conversations longer than THRESHOLD
-        turns (default 1000000) to the per-turn staged plan
+        turns (default 1000000) to the per-turn staged plan and the rest
+        to the partition walk; it overrides --bucketed-input's cogroup
+        choice, so the bucket layout's shuffle elision is not used
   --resume  continue an interrupted run: buckets already recorded in
         ``out_dir/_manifest`` for this stage are anti-joined away
         BEFORE compute (plans/checkpoint.py), so a killed job never
@@ -32,7 +34,8 @@ Flags (optional, any order after the positional args):
         bucket spec written by sources/bucketed.py reaches the planner,
         and default to the conv-grouped cogroup plan — over same-bucket
         tables its two shuffles are elided entirely
-        (tests/test_bucketed.py proves zero Exchange).
+        (tests/test_bucketed.py proves zero Exchange).  With --auto-skew
+        the skew router runs instead.
   --iceberg  read <transcripts_path> as an Iceberg catalog identifier
         (``db.table``) via ``format("iceberg")``.  Explicit, not
         guessed: the old slash-count heuristic misrouted ordinary

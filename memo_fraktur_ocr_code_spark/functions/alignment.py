@@ -75,7 +75,8 @@ def _iter_align(orig_toks: tuple, first_tok: str, rest: tuple) -> list[str]:
     incumbent (the pre-r7 length-bound pruning it replaces was itself
     value-neutral: the bound dominates the ratio, so skipped candidates
     could neither early-exit nor improve the incumbent).  Pinned against
-    the pre-r7 implementation by the property twin in test_kernels."""
+    the naive split search by
+    tests/test_properties.py::test_iter_align_pruning_is_output_identical."""
     n = len(orig_toks)
     rest_joined = "".join(rest)
     lf, lr = len(first_tok), len(rest_joined)
@@ -276,7 +277,8 @@ def align_b_to_a(a: tuple, b: tuple) -> tuple:
     chunks = _repair_nonmatching(chunks)
     chunks = _integrate_junk(chunks)
     aligned = tuple(t for _c, orig in chunks for t in orig)
-    assert len(aligned) == len(a), f"alignment arity {len(aligned)} != {len(a)}"
+    if len(aligned) != len(a):
+        raise ValueError(f"alignment arity {len(aligned)} != {len(a)}")
     return aligned
 
 

@@ -50,8 +50,8 @@ def indel_distance(a: str, b: str) -> int:
     near-match case to a tiny core; the stripped middle runs the
     Allison-Dix bit-parallel LCS — one bigint row per character, exact
     integer arithmetic, so the value is identical to the classic DP
-    (pinned by the `_indel_distance_dp` property twin in test_kernels)
-    at a fraction of the interpreted cost.  This is the hottest kernel
+    (pinned by the `_indel_naive` LCS-row DP twin in
+    tests/test_properties.py) at a fraction of the interpreted cost.  This is the hottest kernel
     of the alignment stage (~70% of `alt_ocr_correct` before the
     rewrite, r7 profile)."""
     if a == b:
@@ -87,31 +87,6 @@ def indel_distance(a: str, b: str) -> int:
         x = row | get(ch, 0)
         row = x & ~(x - ((row << 1) | 1))
     return len(a2) + len(b2) - 2 * row.bit_count()
-
-
-def _indel_distance_dp(a: str, b: str) -> int:
-    """Classic O(n·m) LCS-row DP twin of :func:`indel_distance` — the
-    engine-portable spec the bit-parallel path must match value-for-value
-    (property-tested; not used in any query path).  This is the exact
-    pre-r7 implementation."""
-    if a == b:
-        return 0
-    la, lb = len(a), len(b)
-    if la == 0:
-        return lb
-    if lb == 0:
-        return la
-    prev = [0] * (lb + 1)
-    for i in range(1, la + 1):
-        cur = [0] * (lb + 1)
-        ca = a[i - 1]
-        for j in range(1, lb + 1):
-            if ca == b[j - 1]:
-                cur[j] = prev[j - 1] + 1
-            else:
-                cur[j] = cur[j - 1] if cur[j - 1] >= prev[j] else prev[j]
-        prev = cur
-    return la + lb - 2 * prev[lb]
 
 
 def indel_ratio(a: str, b: str) -> float:

@@ -171,9 +171,12 @@ def assemble_turns(texts: list[str]) -> list[str]:
     # adjacent to a marker (trailing \s* in the dehyphenation regex), so
     # split tolerantly — this *is* the per-turn spec.
     parts = re.split(rf" ?{PAGEBREAK} ?", joined)
-    assert len(parts) == len(texts), (
-        f"pagebreak marker count changed: {len(parts)} != {len(texts)}"
-    )
+    if len(parts) != len(texts):
+        # a turn carrying the marker itself (outside input) would split
+        # into extra parts and misalign every later turn
+        raise ValueError(
+            f"pagebreak marker count changed: {len(parts)} != {len(texts)}"
+        )
     return parts
 
 

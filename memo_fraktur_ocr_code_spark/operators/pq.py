@@ -87,7 +87,8 @@ def _subvectors(v: DataFrame, m: int, d_sub: int) -> DataFrame:
 def _assign_codes_kernel(cb_rows):
     """Arrow-vectorized nearest-code scorer — the bit-for-bit twin of
     the Catalyst ``max(struct(-dist, -code))`` argmin over a broadcast
-    codebook (:func:`_assign_codes_catalyst`), built exactly like
+    codebook (the ``_assign_codes_catalyst`` twin in
+    tests/test_operators.py), built exactly like
     ``similarity._argmax_assign_kernel``:
 
     * squared-L2 runs ``acc = acc + (x - y) * (x - y)`` ascending-d —
@@ -149,7 +150,7 @@ def _assign_codes(subs: DataFrame, codebook: DataFrame) -> DataFrame:
     the broadcast join + struct-max aggregation, whose interpreted
     per-(subvector, centroid) L2 folds dominated training and encoding.
     Codes and tie-breaks are bit-identical to
-    :func:`_assign_codes_catalyst` (test-pinned)."""
+    the ``_assign_codes_catalyst`` twin in tests/test_operators.py."""
     kernel = _assign_codes_kernel(
         codebook.select("sub", "code", "cv").collect()
     )
@@ -158,41 +159,6 @@ def _assign_codes(subs: DataFrame, codebook: DataFrame) -> DataFrame:
         "sub",
         kernel(F.col("sub"), F.col("sv")).alias("code"),
         "sv",
-    )
-
-
-def _assign_codes_catalyst(
-    subs: DataFrame, codebook: DataFrame
-) -> DataFrame:
-    """Nearest-centroid code per (id, sub): broadcast the ``m × ks``
-    codebook, score every (subvector, centroid) pair, and fold the
-    argmin with ONE map-side-combined ``max(struct)`` aggregation —
-    the partial aggregation finishes the argmin before the exchange,
-    so exactly one reduced row per (vector, subspace) shuffles.
-    The engine-portable SPEC for :func:`_assign_codes`' Arrow kernel
-    (and the shape the DuckDB oracle mirrors).
-
-    Tie-break: lowest distance, then lowest code (``max`` of
-    ``(-dist, -code)``) — mirrored by the oracle's
-    ``ORDER BY dist ASC, code ASC`` row_number."""
-    scored = subs.join(F.broadcast(codebook), "sub").select(
-        "id",
-        "sub",
-        F.struct(
-            (-_l2sq(F.col("sv"), F.col("cv"))).alias("nd"),
-            (-F.col("code")).alias("nc"),
-            F.col("sv").alias("sv"),
-        ).alias("_s"),
-    )
-    return (
-        scored.groupBy("id", "sub")
-        .agg(F.max("_s").alias("_b"))
-        .select(
-            "id",
-            "sub",
-            (-F.col("_b.nc")).alias("code"),
-            F.col("_b.sv").alias("sv"),
-        )
     )
 
 

@@ -480,7 +480,8 @@ def kmeans_centroids(
 def _argmax_assign_kernel(cents_rows):
     """Arrow-vectorized nearest-centroid scorer — the bit-for-bit twin
     of the Catalyst ``max(struct(c_sim, -list_id))`` argmax over a
-    broadcast codebook (see :func:`_argmax_assign_catalyst`).
+    broadcast codebook (the ``_argmax_assign_catalyst`` twin in
+    tests/test_operators.py).
 
     ``cents_rows``: the collected ``(list_id, cv)`` codebook — a
     BOUNDED driver action by the broadcast-argmax premise (n_lists
@@ -559,51 +560,11 @@ def _argmax_assign(
     broadcast cross join + struct-max aggregation, whose interpreted
     per-(point, centroid) cosine folds were the dominant per-row cost
     of every Lloyd round (r7, guide §4.2).  Values and tie-breaks are
-    bit-identical to :func:`_argmax_assign_catalyst` (test-pinned)."""
+    bit-identical to the ``_argmax_assign_catalyst`` twin in
+    tests/test_operators.py."""
     assign = _argmax_assign_kernel(cents.select("list_id", "cv").collect())
     return points.select(
         F.col(id_name), "vv", assign(F.col("vv"))["list_id"].alias("list_id")
-    )
-
-
-def _argmax_assign_catalyst(
-    points: DataFrame, cents: DataFrame, id_name: str
-) -> DataFrame:
-    """Nearest-centroid assignment ``(id, vv, list_id)`` as ONE
-    map-side-combined ``max(struct)`` aggregation (r5): every scored
-    row of a point sits in its own input partition after the broadcast
-    cross join, so the partial aggregation completes the argmax before
-    the exchange and the shuffle moves exactly one reduced row per
-    point — a ``row_number`` window here would shuffle AND sort the
-    full corpus × n_lists expansion (the 100 TB scale-killer class).
-
-    Tie-break is the historical window's verbatim: highest ``c_sim``,
-    then highest ``-list_id`` = SMALLEST (numeric) list id.  ``vv``
-    rides as a trailing struct field the comparison never reaches,
-    because ``(c_sim, -list_id)`` is already a total order (list ids
-    are unique).  NaN ``c_sim`` (zero-norm vector) wins the max — the
-    same placement as the window's ``DESC`` ordering and the DuckDB
-    oracle's, so cross-engine parity holds even on pathological
-    inputs."""
-    scored = points.crossJoin(F.broadcast(cents)).select(
-        F.col(id_name),
-        F.struct(
-            (
-                _dot(F.col("vv"), F.col("cv"))
-                / (_norm(F.col("vv")) * _norm(F.col("cv")))
-            ).alias("c_sim"),
-            (-F.col("list_id")).alias("_neg_list"),
-            F.col("vv").alias("vv"),
-        ).alias("_s"),
-    )
-    return (
-        scored.groupBy(id_name)
-        .agg(F.max("_s").alias("_b"))
-        .select(
-            F.col(id_name),
-            F.col("_b.vv").alias("vv"),
-            (-F.col("_b._neg_list")).alias("list_id"),
-        )
     )
 
 
@@ -638,7 +599,7 @@ def cluster_assign(
     # bounded (n_lists rows) and the assignment becomes a zero-shuffle
     # Arrow projection — bit-identical values and tie-breaks to the
     # broadcast cross join + struct-max aggregation it replaces
-    # (test-pinned against _argmax_assign_catalyst).
+    # (pinned against _argmax_assign_catalyst in tests/test_operators.py).
     assign = _argmax_assign_kernel(
         centroids.select("list_id", "cv").collect()
     )

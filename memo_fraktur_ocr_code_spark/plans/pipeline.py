@@ -2,10 +2,11 @@
 
 Composition mirrors the reference pipeline order
 (run_eval_pipeline.py:54-64): assemble → correct_easy → correct_hard →
-sym_wordcorrect, re-expressed as one Spark job graph with exactly one
-conversation-grouped shuffle (assembly) plus one per-turn equi-join (alt
-channel); everything else is embarrassingly parallel per-turn work in
-whole-stage codegen or Arrow kernels.
+sym_wordcorrect, stated once per conversation in :func:`correct_turns`.
+The physical plans only differ in how a conversation's rows reach that
+kernel: the default walks conv_id-sorted partitions after exactly one
+shuffle; the per-turn staged operators remain as the skew router's
+branch for pathologically long conversations.
 """
 
 from __future__ import annotations
@@ -37,6 +38,68 @@ from memo_fraktur_ocr_code_spark.operators.wordcorrect import (
 _OUT_SCHEMA = "conv_id string, turn_idx int, corrected_text string"
 
 
+def correct_turns(
+    texts: list,
+    alts: list | None,
+    do_easy: bool,
+    guard: frozenset | None,
+    index,
+    bigrams: dict | None,
+    augment: tuple | None,
+    memos: tuple,
+) -> list[str]:
+    """One conversation's turns (already in stable (turn_idx, ts) order)
+    through assemble → correct_easy → correct_hard (when ``alts`` is not
+    None: the alt channel projected onto the same turns) → SymSpell
+    (when ``index`` is not None).  Non-string turn texts read as empty.
+    Returns per-turn corrected text, same arity as ``texts`` — the
+    composition ``oracle.spec.correct_conversation`` states
+    independently.
+
+    ``memos`` = ``(easy, alt, suggestion)`` dicts, pure-function caches
+    the caller scopes (the partition walk keeps them per partition, so
+    replicated turns skip recomputation; they cannot change bytes).  In
+    augment mode suggestions depend on this conversation's own
+    augmented dictionary, so the suggestion cache is conversation-scoped
+    here and ``memos[2]`` is not used."""
+    easy_memo, alt_memo, sug_memo = memos
+    texts = assemble_turns([t if isinstance(t, str) else "" for t in texts])
+    if do_easy:
+        out = []
+        for t in texts:
+            v = easy_memo.get(t)
+            if v is None:
+                v = easy_memo[t] = correct_easy(t)
+            out.append(v)
+        texts = out
+    if alts is not None:
+        alts = assemble_turns(
+            [a if isinstance(a, str) else "" for a in alts]
+        )
+        out = []
+        for t, a in zip(texts, alts):
+            if t:
+                v = alt_memo.get((t, a))
+                if v is None:
+                    v = alt_memo[(t, a)] = alt_ocr_correct(t, a, guard)
+                t = v
+            out.append(t)
+        texts = out
+    if index is not None:
+        overlay = None
+        if augment is not None:
+            overlay = build_conv_delta(
+                index.words, conv_freqlist(texts), *augment,
+                base_top50=index.top50_sum,
+            )
+            sug_memo = {}
+        texts = [
+            word_correct_text(t, index, sug_memo, bigrams, overlay)
+            for t in texts
+        ]
+    return texts
+
+
 def correct_pipeline(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -55,8 +118,10 @@ def correct_pipeline(
     byte-equal to ``oracle.spec.correct_corpus`` under the stable
     (turn_idx, ts) ordering.
 
-    Three physically different plans, same bytes out (all covered by the
-    equality tests):
+    Every plan runs each conversation through :func:`correct_turns`;
+    they differ only in how a conversation's rows reach it.  The
+    lexicon broadcasts (SymSpell index, top-600 guard set, bigram
+    table) are built once here, and only when a stage reads them.
 
     * ``fused=True`` (default): ONE shuffle — both channels union into a
       hash repartition by conv_id, sorted within partitions, and a single
@@ -64,28 +129,33 @@ def correct_pipeline(
       (possibly batch-split) conversation between Arrow batches.  Per-batch
       kernel overhead instead of per-group — the plan for the 100 TB run.
     * ``fused='cogroup'``: one cogrouped Arrow kernel per conv (2 shuffles,
-      per-group dispatch).  Simpler; slower on short conversations.
-    * ``fused=False``: staged operators (Catalyst regexp chain for easy,
-      separate kernels, equi-join for the alt channel) — kept for plan
-      inspection and as a cross-check.
+      per-group dispatch).  Slower on short conversations, but over
+      conv_id-bucketed tables both shuffles are elided (zero Exchange).
     * ``fused='auto'``: skew router — conversations longer than
-      ``long_conv_threshold`` turns take the staged plan (whose expensive
-      correct_hard/sym stages are per-turn and rebalance freely), the
-      rest take the partition-walk plan; the outputs union.  This removes
-      the one straggler mode of the fused plans (a single 10^8-turn
-      conversation pinning one task) without giving up their per-batch
-      kernel economics for the short tail.  Pathological conversations
-      are few by definition, so the long-id list is a broadcast.
+      ``long_conv_threshold`` turns take the staged plan (per-turn
+      operators: Catalyst regexp chain for easy, an equi-join for the
+      alt channel, separate kernels — its expensive correct_hard/sym
+      stages rebalance freely), the rest take the partition-walk plan;
+      the outputs union.  This removes the one straggler mode of the
+      fused plans (a single 10^8-turn conversation pinning one task)
+      without giving up their per-batch kernel economics for the short
+      tail.  Pathological conversations are few by definition, so the
+      long-id list is collected to the driver.
 
-    Extreme conversation-length skew: the fused plans process each
-    conversation inside one task (assembly's cross-turn dehyphenation is
-    order-dependent) — use ``fused='auto'`` (or ``False``) when the conv
-    length distribution has a heavy tail.
+    Any other ``fused`` value raises ``ValueError``.  Extreme
+    conversation-length skew: the fused plans process each conversation
+    inside one task (assembly's cross-turn dehyphenation is
+    order-dependent) — use ``fused='auto'`` when the conv length
+    distribution has a heavy tail.  ``augment_per_conv`` needs a
+    conversation-grouped sym stage, so it refuses ``fused='auto'``.
     """
+    if not (fused is True or fused in ("cogroup", "auto")):
+        raise ValueError(
+            f"fused must be True, 'cogroup' or 'auto', not {fused!r}"
+        )
     augment = None
     if augment_per_conv:
-        # per-conv augmentation needs a conversation-grouped sym stage
-        if fused not in (True, "cogroup"):
+        if fused == "auto":
             raise ValueError(
                 "augment_per_conv requires a conv-grouped plan"
                 " (fused=True or 'cogroup')"
@@ -100,73 +170,52 @@ def correct_pipeline(
             if isinstance(augment_per_conv, tuple)
             else (2, 250)
         )
+    if not do_hard:
+        alt_transcripts = None
+    # each broadcast is None unless a stage reads it: only sym reads the
+    # index and bigrams, only correct_hard the guard set, so the
+    # do_easy-only configuration builds no SymSpell index at all
+    use_alt = alt_transcripts is not None
+    bc_index = bc_guard = bc_bigrams = None
+    if do_sym or use_alt:
+        bc_index, bc_guard = broadcast_lexicon(spark, lexicon_pairs)
+    if do_sym and bigram_pairs is not None:
+        bc_bigrams = spark.sparkContext.broadcast(dict(bigram_pairs))
+    # correct_turns' argument order
+    bcs = (bc_guard if use_alt else None, bc_index if do_sym else None,
+           bc_bigrams)
     if fused == "auto":
         return _correct_pipeline_skew_routed(
-            spark, transcripts, alt_transcripts, lexicon_pairs,
-            do_easy, do_hard, do_sym, num_partitions, bigram_pairs,
-            long_conv_threshold,
-        )
-    if fused is True:
-        return _correct_pipeline_partition(
-            spark, transcripts, alt_transcripts, lexicon_pairs,
-            do_easy, do_hard, do_sym, num_partitions, bigram_pairs,
-            augment,
+            spark, transcripts, alt_transcripts, do_easy, bcs,
+            num_partitions, long_conv_threshold,
         )
     if fused == "cogroup":
         return _correct_pipeline_fused(
-            spark, transcripts, alt_transcripts, lexicon_pairs,
-            do_easy, do_hard, do_sym, bigram_pairs, augment,
+            transcripts, alt_transcripts, do_easy, bcs, augment
         )
-    return _correct_pipeline_staged(
-        spark, transcripts, alt_transcripts, lexicon_pairs,
-        do_easy, do_hard, do_sym, bigram_pairs,
+    return _correct_pipeline_partition(
+        spark, transcripts, alt_transcripts, do_easy, bcs,
+        num_partitions, augment,
     )
 
 
-def _lexicon_broadcasts(spark, lexicon_pairs, needed: bool):
-    """Build + broadcast the SymSpell deletion index only when a kernel
-    will actually dereference it (``do_sym`` needs the index,
-    ``do_hard`` with an alt channel needs the top-600 guard set).  The
-    do_easy-only configuration previously still paid the full
-    O(V × prefix-deletes) driver-side build and the executor broadcast
-    for an index no kernel reads (ADVICE r3)."""
-    if needed:
-        return broadcast_lexicon(spark, lexicon_pairs)
-    return None, None
+def _deref(bcs: tuple) -> tuple:
+    """Executor-side values of ``bcs``; an unbuilt broadcast stays None."""
+    return tuple(None if b is None else b.value for b in bcs)
 
 
 def _correct_pipeline_staged(
-    spark: SparkSession,
     transcripts: DataFrame,
     alt_transcripts: DataFrame | None,
-    lexicon_pairs,
     do_easy: bool,
-    do_hard: bool,
-    do_sym: bool,
-    bigram_pairs: dict | None = None,
-    prebuilt: tuple | None = None,
+    bcs: tuple,
 ) -> DataFrame:
-    # `prebuilt` = (bc_index, bc_guard, bc_bigrams): the skew router
-    # builds/broadcasts the lexicon ONCE and shares it across both
-    # branches (a second driver-side SymSpellIndex build + broadcast per
-    # plan is pure overhead)
-    if prebuilt is not None:
-        bc_index, bc_guard, bc_bigrams = prebuilt
-    else:
-        bc_index, bc_guard = _lexicon_broadcasts(
-            spark, lexicon_pairs,
-            do_sym or (do_hard and alt_transcripts is not None),
-        )
-        bc_bigrams = (
-            spark.sparkContext.broadcast(dict(bigram_pairs))
-            if bigram_pairs is not None
-            else None
-        )
-
+    """Per-turn staged operators — the skew router's whale branch."""
+    bc_guard, bc_index, bc_bigrams = bcs
     df = assemble_transcripts(transcripts)
     if do_easy:
         df = df.withColumn("text", correct_easy_col("text"))
-    if do_hard and alt_transcripts is not None:
+    if alt_transcripts is not None:
         # Project the alt channel onto the BASE turn grid BEFORE
         # assembly (oracle spec.py:105-112, matching both fused plans):
         # alt-only turns are dropped, base turns missing from alt get an
@@ -194,7 +243,7 @@ def _correct_pipeline_staged(
         )
         alt = assemble_transcripts(alt_proj)
         df = correct_hard(df, alt, bc_guard)
-    if do_sym:
+    if bc_index is not None:
         df = sym_wordcorrect(df, bc_index, bc_bigrams)
     return df.select(
         "conv_id", "turn_idx", F.col("text").alias("corrected_text")
@@ -205,12 +254,9 @@ def _correct_pipeline_skew_routed(
     spark: SparkSession,
     transcripts: DataFrame,
     alt_transcripts: DataFrame | None,
-    lexicon_pairs,
     do_easy: bool,
-    do_hard: bool,
-    do_sym: bool,
+    bcs: tuple,
     num_partitions: int | None,
-    bigram_pairs: dict | None,
     long_conv_threshold: int,
 ) -> DataFrame:
     """Route each conversation whole to the plan that handles its length:
@@ -223,16 +269,6 @@ def _correct_pipeline_skew_routed(
     ``long_ids`` DataFrame was re-aggregated from scratch by each of
     the four branch joins (ADVICE r3).  Literal ``isin`` filters also
     let the scans prune instead of building four broadcast joins."""
-    use_alt = do_hard and alt_transcripts is not None
-    bc_index, bc_guard = _lexicon_broadcasts(
-        spark, lexicon_pairs, do_sym or use_alt
-    )
-    bc_bigrams = (
-        spark.sparkContext.broadcast(dict(bigram_pairs))
-        if bigram_pairs is not None
-        else None
-    )
-    prebuilt = (bc_index, bc_guard, bc_bigrams)
     long_list = [
         r["conv_id"]
         for r in transcripts.groupBy("conv_id")
@@ -245,9 +281,8 @@ def _correct_pipeline_skew_routed(
         # no whales: the partition walk handles everything — skip the
         # staged branch entirely
         return _correct_pipeline_partition(
-            spark, transcripts, alt_transcripts, lexicon_pairs,
-            do_easy, do_hard, do_sym, num_partitions, bigram_pairs,
-            prebuilt=prebuilt,
+            spark, transcripts, alt_transcripts, do_easy, bcs,
+            num_partitions,
         )
     # NULL-safe routing (ADVICE r3): a bare ``isin`` evaluates to NULL for
     # NULL conv_id rows, and ``where`` drops NULL — so NULL-key rows would
@@ -271,38 +306,22 @@ def _correct_pipeline_skew_routed(
         a_short = alt_transcripts.where(~is_long)
         a_long = alt_transcripts.where(is_long)
     short_out = _correct_pipeline_partition(
-        spark, t_short, a_short, lexicon_pairs,
-        do_easy, do_hard, do_sym, num_partitions, bigram_pairs,
-        prebuilt=prebuilt,
+        spark, t_short, a_short, do_easy, bcs, num_partitions
     )
-    long_out = _correct_pipeline_staged(
-        spark, t_long, a_long, lexicon_pairs,
-        do_easy, do_hard, do_sym, bigram_pairs,
-        prebuilt=prebuilt,
-    )
+    long_out = _correct_pipeline_staged(t_long, a_long, do_easy, bcs)
     return short_out.unionByName(long_out)
 
 
 def _correct_pipeline_fused(
-    spark: SparkSession,
     transcripts: DataFrame,
     alt_transcripts: DataFrame | None,
-    lexicon_pairs,
     do_easy: bool,
-    do_hard: bool,
-    do_sym: bool,
-    bigram_pairs: dict | None = None,
-    augment: tuple | None = None,
+    bcs: tuple,
+    augment: tuple | None,
 ) -> DataFrame:
-    use_alt = do_hard and alt_transcripts is not None
-    bc_index, bc_guard = _lexicon_broadcasts(
-        spark, lexicon_pairs, do_sym or use_alt
-    )
-    bc_bigrams = (
-        spark.sparkContext.broadcast(dict(bigram_pairs))
-        if bigram_pairs is not None
-        else None
-    )
+    # computed here, not in the kernel: a closure over alt_transcripts
+    # would pickle the DataFrame into the UDF
+    use_alt = alt_transcripts is not None
 
     def kernel(base_pdf: pd.DataFrame, alt_pdf: pd.DataFrame) -> pd.DataFrame:
         if len(base_pdf) == 0:  # conv present only in the alt channel
@@ -313,38 +332,14 @@ def _correct_pipeline_fused(
             ["turn_idx", "ts"] if "ts" in base_pdf.columns else ["turn_idx"]
         )
         base_pdf = base_pdf.sort_values(order_cols, kind="mergesort")
-        texts = assemble_turns(
-            [t if isinstance(t, str) else "" for t in base_pdf["text"]]
-        )
-        if do_easy:
-            texts = [correct_easy(t) for t in texts]
+        alts = None
         if use_alt:
             amap = dict(zip(alt_pdf["turn_idx"], alt_pdf["text"]))
-            alts = assemble_turns(
-                [
-                    amap.get(ti) if isinstance(amap.get(ti), str) else ""
-                    for ti in base_pdf["turn_idx"]
-                ]
-            )
-            mf = bc_guard.value
-            texts = [
-                alt_ocr_correct(t, a, mf) if t else t
-                for t, a in zip(texts, alts)
-            ]
-        if do_sym:
-            index = bc_index.value
-            bgc = bc_bigrams.value if bc_bigrams is not None else None
-            overlay = None
-            if augment is not None:
-                overlay = build_conv_delta(
-                    index.words, conv_freqlist(texts), *augment,
-                    base_top50=index.top50_sum,
-                )
-            memo: dict = {}
-            texts = [
-                word_correct_text(t, index, memo, bgc, overlay)
-                for t in texts
-            ]
+            alts = [amap.get(ti) for ti in base_pdf["turn_idx"]]
+        texts = correct_turns(
+            base_pdf["text"].tolist(), alts, do_easy, *_deref(bcs),
+            augment, ({}, {}, {}),
+        )
         return pd.DataFrame(
             {
                 "conv_id": base_pdf["conv_id"].to_numpy(),
@@ -372,14 +367,10 @@ def _correct_pipeline_partition(
     spark: SparkSession,
     transcripts: DataFrame,
     alt_transcripts: DataFrame | None,
-    lexicon_pairs,
     do_easy: bool,
-    do_hard: bool,
-    do_sym: bool,
+    bcs: tuple,
     num_partitions: int | None = None,
-    bigram_pairs: dict | None = None,
     augment: tuple | None = None,
-    prebuilt: tuple | None = None,
 ) -> DataFrame:
     """Single-shuffle plan: union both channels, hash-repartition by
     conv_id, sort within partitions, process whole partitions in one
@@ -392,19 +383,7 @@ def _correct_pipeline_partition(
     shuffle size = inputs once, kernel overhead amortized over full
     2k-row batches, no per-group pandas construction.
     """
-    use_alt = do_hard and alt_transcripts is not None
-    if prebuilt is not None:
-        bc_index, bc_guard, bc_bigrams = prebuilt
-    else:
-        bc_index, bc_guard = _lexicon_broadcasts(
-            spark, lexicon_pairs, do_sym or use_alt
-        )
-        bc_bigrams = (
-            spark.sparkContext.broadcast(dict(bigram_pairs))
-            if bigram_pairs is not None
-            else None
-        )
-
+    use_alt = alt_transcripts is not None
     has_ts = "ts" in transcripts.columns
     base = transcripts.select(
         "conv_id",
@@ -413,29 +392,22 @@ def _correct_pipeline_partition(
         F.lit(0).alias("side"),
         *([F.col("ts")] if has_ts else []),
     )
+    u = base
     if use_alt:
-        alt = alt_transcripts.select(
-            "conv_id",
-            "turn_idx",
-            F.col("text"),
-            F.lit(1).alias("side"),
-            # the ts contract is "orderable", not "timestamp" — fill the
-            # alt side with a typed NULL of whatever type the base
-            # carries (a hardcoded timestamp cast broke unionByName for
-            # e.g. bigint epoch columns; ADVICE r3)
-            *(
-                [
-                    F.lit(None)
-                    .cast(transcripts.schema["ts"].dataType)
-                    .alias("ts")
-                ]
-                if has_ts
-                else []
-            ),
+        # the ts contract is "orderable", not "timestamp" — fill the alt
+        # side with a typed NULL of whatever type the base carries, so
+        # the union also holds for e.g. bigint epoch columns
+        alt_ts = (
+            [F.lit(None).cast(transcripts.schema["ts"].dataType).alias("ts")]
+            if has_ts
+            else []
         )
-        u = base.unionByName(alt)
-    else:
-        u = base
+        u = base.unionByName(
+            alt_transcripts.select(
+                "conv_id", "turn_idx", F.col("text"),
+                F.lit(1).alias("side"), *alt_ts,
+            )
+        )
     sort_cols = ["conv_id", "side", "turn_idx"] + (["ts"] if has_ts else [])
     # Explicit partition count: the kernel stage is CPU-bound per row, so
     # AQE's byte-based partition coalescing (64 MB advisory) would collapse
@@ -451,10 +423,7 @@ def _correct_pipeline_partition(
         # (narrow projection, intra-partition order preserved).
         d = d.select("conv_id", "turn_idx", "text", "side")
 
-    def process(
-        pdf: pd.DataFrame, index, mf, memo: dict, bgc=None,
-        easy_memo: dict | None = None, alt_memo: dict | None = None,
-    ) -> pd.DataFrame:
+    def process(pdf: pd.DataFrame, ctx: tuple) -> pd.DataFrame:
         conv_out, turn_out, text_out = [], [], []
         convs = pdf["conv_id"].to_numpy()
         sides = pdf["side"].to_numpy()
@@ -471,83 +440,16 @@ def _correct_pipeline_partition(
             for k in range(start, end):
                 if sides[k] == 0:
                     base_ti.append(turn_idx[k])
-                    base_tx.append(
-                        texts_in[k] if isinstance(texts_in[k], str) else ""
-                    )
+                    base_tx.append(texts_in[k])
                 else:
                     alt_map[turn_idx[k]] = texts_in[k]
             start = end
             if not base_ti:
                 continue
-            texts = assemble_turns(base_tx)
-            if do_easy:
-                # per-partition memo of the pure per-turn regex chain
-                # (r7): replicated corpora repeat turn texts within a
-                # partition, and the memo is the same deterministic
-                # pure-function cache as the token-suggestion memo below
-                if easy_memo is None:
-                    texts = [correct_easy(t) for t in texts]
-                else:
-                    out = []
-                    for t in texts:
-                        v = easy_memo.get(t)
-                        if v is None:
-                            v = easy_memo[t] = correct_easy(t)
-                        out.append(v)
-                    texts = out
-            if use_alt:
-                alts = assemble_turns(
-                    [
-                        alt_map.get(ti)
-                        if isinstance(alt_map.get(ti), str)
-                        else ""
-                        for ti in base_ti
-                    ]
-                )
-                if alt_memo is None:
-                    texts = [
-                        alt_ocr_correct(t, a, mf) if t else t
-                        for t, a in zip(texts, alts)
-                    ]
-                else:
-                    # keyed on the exact (text, alt) argument pair — a
-                    # pure per-turn function, so the cache cannot
-                    # change bytes, only skip recomputation
-                    out = []
-                    for t, a in zip(texts, alts):
-                        if not t:
-                            out.append(t)
-                            continue
-                        v = alt_memo.get((t, a))
-                        if v is None:
-                            v = alt_memo[(t, a)] = alt_ocr_correct(
-                                t, a, mf
-                            )
-                        out.append(v)
-                    texts = out
-            if do_sym:
-                if augment is not None:
-                    # conv-scoped overlay + memo: suggestions depend on
-                    # this conversation's own augmented dictionary
-                    overlay = build_conv_delta(
-                        index.words, conv_freqlist(texts), *augment,
-                        base_top50=index.top50_sum,
-                    )
-                    conv_memo: dict = {}
-                    texts = [
-                        word_correct_text(
-                            t, index, conv_memo, bgc, overlay
-                        )
-                        for t in texts
-                    ]
-                else:
-                    texts = [
-                        word_correct_text(t, index, memo, bgc)
-                        for t in texts
-                    ]
+            alts = [alt_map.get(ti) for ti in base_ti] if use_alt else None
             conv_out.extend([cid] * len(base_ti))
             turn_out.extend(base_ti)
-            text_out.extend(texts)
+            text_out.extend(correct_turns(base_tx, alts, do_easy, *ctx))
         return pd.DataFrame(
             {
                 "conv_id": conv_out,
@@ -559,16 +461,10 @@ def _correct_pipeline_partition(
     def kernel(batches):
         # broadcast deref + memos once per partition, not per Arrow
         # batch: every memo is a pure-function cache (deterministic), so
-        # partition scope only raises its hit rate.  r7 adds turn-level
-        # memos for the easy regex chain and the (text, alt) alignment —
-        # replicated/duplicated corpora repeat whole turns within a
-        # partition, and the alignment is the kernel's dominant term.
-        index = bc_index.value if do_sym else None
-        mf = bc_guard.value if use_alt else None
-        bgc = bc_bigrams.value if bc_bigrams is not None else None
-        memo: dict = {}
-        easy_memo: dict = {}
-        alt_memo: dict = {}
+        # partition scope only raises its hit rate — replicated or
+        # duplicated corpora repeat whole turns within a partition, and
+        # the (text, alt) alignment is the kernel's dominant term.
+        ctx = (*_deref(bcs), augment, ({}, {}, {}))
         carry: pd.DataFrame | None = None
         for pdf in batches:
             if carry is not None and len(carry):
@@ -581,12 +477,8 @@ def _correct_pipeline_partition(
             done = pdf.iloc[:boundary]
             carry = pdf.iloc[boundary:]
             if len(done):
-                yield process(
-                    done, index, mf, memo, bgc, easy_memo, alt_memo
-                )
+                yield process(done, ctx)
         if carry is not None and len(carry):
-            yield process(
-                carry, index, mf, memo, bgc, easy_memo, alt_memo
-            )
+            yield process(carry, ctx)
 
     return d.mapInPandas(kernel, schema=_OUT_SCHEMA)

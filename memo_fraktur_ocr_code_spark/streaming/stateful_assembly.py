@@ -20,14 +20,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from memo_fraktur_ocr_code_spark.functions.symspell import word_correct_text
-from memo_fraktur_ocr_code_spark.functions.textspec import (
-    assemble_turns,
-    correct_easy,
-)
 from memo_fraktur_ocr_code_spark.operators.wordcorrect import (
     broadcast_lexicon,
 )
+from memo_fraktur_ocr_code_spark.plans.pipeline import correct_turns
 
 OUT_SCHEMA = (
     "conv_id string, turn_idx int, corrected_text string, version int"
@@ -44,7 +40,7 @@ def stateful_assemble_correct(
     """``stream_df``: streaming (conv_id, turn_idx, text).  Returns a
     streaming DataFrame in update semantics (one emission per conversation
     per trigger that touched it)."""
-    bc_index, _guard = broadcast_lexicon(spark, lexicon_pairs)
+    bc_index = broadcast_lexicon(spark, lexicon_pairs)[0] if do_sym else None
 
     def fn(key, pdfs, state: GroupState):
         (conv_id,) = key
@@ -67,12 +63,10 @@ def stateful_assemble_correct(
         texts = [texts[i] for i in order]
         state.update((turn_idxs, texts))
 
-        assembled = assemble_turns(list(texts))
-        corrected = [correct_easy(t) for t in assembled]
-        if do_sym:
-            index = bc_index.value
-            memo: dict = {}
-            corrected = [word_correct_text(t, index, memo) for t in corrected]
+        corrected = correct_turns(
+            texts, None, True, None,
+            bc_index.value if do_sym else None, None, None, ({}, {}, {}),
+        )
         version = len(turn_idxs)
         yield pd.DataFrame(
             {

@@ -5,6 +5,8 @@ Cases lifted from the reference's embedded fixtures and README work log
 
 from __future__ import annotations
 
+import pytest
+
 from memo_fraktur_ocr_code_spark.functions.alignment import (
     align_b_to_a,
     alt_ocr_correct,
@@ -25,6 +27,7 @@ from memo_fraktur_ocr_code_spark.functions.symspell import (
     word_correct_text,
 )
 from memo_fraktur_ocr_code_spark.functions.textspec import (
+    PAGEBREAK,
     assemble_turns,
     clean_page_lines,
     correct_easy,
@@ -68,6 +71,14 @@ def test_clean_page_lines():
     assert clean_page_lines("text\n 12 x\n ab ") == "text\n 12 x\n ab "
 
 
+def test_assemble_turns_rejects_pagebreak_marker_in_turn():
+    """A turn carrying the internal pagebreak marker would split into an
+    extra part and shift every later turn's output: an explicit error,
+    not an ``assert`` that vanishes under ``python -O``."""
+    with pytest.raises(ValueError, match="pagebreak marker count"):
+        assemble_turns(["abc", f"def {PAGEBREAK} ghi", "jkl"])
+
+
 def test_assemble_turns_cross_turn_hyphen():
     turns = ["4\nden gamle Mu-", "ren stod fast\nved Aaen"]
     out = assemble_turns(turns)
@@ -94,10 +105,8 @@ def test_indel_bitparallel_matches_dp_twin():
     near-match shapes the prefix/suffix strip targets."""
     import random
 
-    from memo_fraktur_ocr_code_spark.functions.levtools import (
-        _indel_distance_dp,
-        indel_distance,
-    )
+    from memo_fraktur_ocr_code_spark.functions.levtools import indel_distance
+    from tests.test_properties import _indel_naive
 
     rng = random.Random(20260822)
     alpha = "abæſ¶◇☐ xyz"
@@ -108,16 +117,16 @@ def test_indel_bitparallel_matches_dp_twin():
         b = "".join(
             rng.choice(alpha) for _ in range(rng.randrange(0, 40))
         )
-        assert indel_distance(a, b) == _indel_distance_dp(a, b), (a, b)
+        assert indel_distance(a, b) == _indel_naive(a, b), (a, b)
     # long asymmetric pair exercises the shorter-side-masked swap
     a = "".join(rng.choice(alpha) for _ in range(700))
     b = "".join(rng.choice(alpha) for _ in range(90))
-    assert indel_distance(a, b) == _indel_distance_dp(a, b)
+    assert indel_distance(a, b) == _indel_naive(a, b)
     for a, b in [
         ("", ""), ("", "abc"), ("abc", ""), ("same", "same"),
         ("prefixXsuffix", "prefixYsuffix"), ("aaaa", "aa"),
     ]:
-        assert indel_distance(a, b) == _indel_distance_dp(a, b)
+        assert indel_distance(a, b) == _indel_naive(a, b)
 
 
 def test_cer_defs_distinct():

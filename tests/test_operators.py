@@ -25,7 +25,10 @@ from memo_fraktur_ocr_code_spark.operators.multimodal import (
     extract_features,
     frame_sample_plan,
 )
+from memo_fraktur_ocr_code_spark.operators.pq import _l2sq
 from memo_fraktur_ocr_code_spark.operators.similarity import (
+    _dot,
+    _norm,
     cosine_topk,
     srp_lsh_topk,
 )
@@ -642,6 +645,44 @@ def test_srp_signature_arrow_equals_catalyst_fold(spark):
         assert both.where(F.col("c") != F.col("a")).count() == 0
 
 
+def _argmax_assign_catalyst(points, cents, id_name):
+    """Nearest-centroid assignment ``(id, vv, list_id)`` as ONE
+    map-side-combined ``max(struct)`` aggregation (r5): every scored
+    row of a point sits in its own input partition after the broadcast
+    cross join, so the partial aggregation completes the argmax before
+    the exchange and the shuffle moves exactly one reduced row per
+    point — a ``row_number`` window here would shuffle AND sort the
+    full corpus × n_lists expansion (the 100 TB scale-killer class).
+
+    Tie-break is the historical window's verbatim: highest ``c_sim``,
+    then highest ``-list_id`` = SMALLEST (numeric) list id.  ``vv``
+    rides as a trailing struct field the comparison never reaches,
+    because ``(c_sim, -list_id)`` is already a total order (list ids
+    are unique).  NaN ``c_sim`` (zero-norm vector) wins the max — the
+    same placement as the window's ``DESC`` ordering and the DuckDB
+    oracle's, so cross-engine parity holds even on pathological
+    inputs."""
+    scored = points.crossJoin(F.broadcast(cents)).select(
+        F.col(id_name),
+        F.struct(
+            (
+                _dot(F.col("vv"), F.col("cv"))
+                / (_norm(F.col("vv")) * _norm(F.col("cv")))
+            ).alias("c_sim"),
+            (-F.col("list_id")).alias("_neg_list"),
+            F.col("vv").alias("vv"),
+        ).alias("_s"),
+    )
+    return (
+        scored.groupBy(id_name)
+        .agg(F.max("_s").alias("_b"))
+        .select(
+            F.col(id_name),
+            F.col("_b.vv").alias("vv"),
+            (-F.col("_b._neg_list")).alias("list_id"),
+        )
+    )
+
 def test_argmax_assign_arrow_equals_catalyst(spark):
     """The r7 Arrow argmax kernel must reproduce the Catalyst
     ``max(struct(c_sim, -list_id))`` path BIT FOR BIT — assignments AND
@@ -651,7 +692,6 @@ def test_argmax_assign_arrow_equals_catalyst(spark):
     import os
 
     from memo_fraktur_ocr_code_spark.operators.similarity import (
-        _argmax_assign_catalyst,
         _argmax_assign_kernel,
         _as_double_array,
     )
@@ -720,7 +760,6 @@ def test_pair_dot_arrow_equals_catalyst_fold(spark):
     side returns NULL like the fold."""
     from memo_fraktur_ocr_code_spark.operators.similarity import (
         _as_double_array,
-        _dot,
         _pair_dot,
     )
 
@@ -747,6 +786,39 @@ def test_pair_dot_arrow_equals_catalyst_fold(spark):
         assert r.c == r.p or (r.c is None and r.p is None)
 
 
+def _assign_codes_catalyst(subs, codebook):
+    """Nearest-centroid code per (id, sub): broadcast the ``m × ks``
+    codebook, score every (subvector, centroid) pair, and fold the
+    argmin with ONE map-side-combined ``max(struct)`` aggregation —
+    the partial aggregation finishes the argmin before the exchange,
+    so exactly one reduced row per (vector, subspace) shuffles.
+    The engine-portable SPEC for :func:`_assign_codes`' Arrow kernel
+    (and the shape the DuckDB oracle mirrors).
+
+    Tie-break: lowest distance, then lowest code (``max`` of
+    ``(-dist, -code)``) — mirrored by the oracle's
+    ``ORDER BY dist ASC, code ASC`` row_number."""
+    scored = subs.join(F.broadcast(codebook), "sub").select(
+        "id",
+        "sub",
+        F.struct(
+            (-_l2sq(F.col("sv"), F.col("cv"))).alias("nd"),
+            (-F.col("code")).alias("nc"),
+            F.col("sv").alias("sv"),
+        ).alias("_s"),
+    )
+    return (
+        scored.groupBy("id", "sub")
+        .agg(F.max("_s").alias("_b"))
+        .select(
+            "id",
+            "sub",
+            (-F.col("_b.nc")).alias("code"),
+            F.col("_b.sv").alias("sv"),
+        )
+    )
+
+
 def test_assign_codes_arrow_equals_catalyst(spark):
     """The r7 Arrow PQ argmin kernel must reproduce the Catalyst
     ``max(struct(-dist, -code))`` assignment exactly on fixture
@@ -754,7 +826,6 @@ def test_assign_codes_arrow_equals_catalyst(spark):
     subvector fall-through."""
     from memo_fraktur_ocr_code_spark.operators.pq import (
         _assign_codes,
-        _assign_codes_catalyst,
         _subvectors,
     )
     from memo_fraktur_ocr_code_spark.operators.similarity import (

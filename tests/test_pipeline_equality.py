@@ -11,7 +11,10 @@ from __future__ import annotations
 import pytest
 
 from memo_fraktur_ocr_code_spark.oracle.spec import correct_corpus
-from memo_fraktur_ocr_code_spark.plans.pipeline import correct_pipeline
+from memo_fraktur_ocr_code_spark.plans.pipeline import (
+    correct_pipeline,
+    correct_turns,
+)
 from memo_fraktur_ocr_code_spark.sources.fixtures import make_fixture
 
 
@@ -27,13 +30,23 @@ def _to_dfs(spark, transcripts, alt_rows):
     return tdf, adf
 
 
-def _compare(spark, transcripts, alt_rows, lexicon, fused=True, **flags):
+# The three physical plans.  The staged per-turn plan is the skew
+# router's whale branch; threshold 0 sends every conversation down it.
+PLANS = {
+    "partition": {"fused": True},
+    "cogroup": {"fused": "cogroup"},
+    "staged": {"fused": "auto", "long_conv_threshold": 0},
+}
+
+
+def _compare(spark, transcripts, alt_rows, lexicon, plan=PLANS["partition"],
+             **flags):
     tdf, adf = _to_dfs(spark, transcripts, alt_rows)
     got = {
         (r.conv_id, r.turn_idx): r.corrected_text
         for r in correct_pipeline(
             spark, tdf, adf if flags.get("do_hard", True) else None,
-            lexicon, fused=fused, **flags
+            lexicon, **plan, **flags
         ).collect()
     }
     want = {
@@ -55,9 +68,7 @@ def _compare(spark, transcripts, alt_rows, lexicon, fused=True, **flags):
     assert len(got) == len(transcripts)
 
 
-@pytest.mark.parametrize(
-    "fused", [True, "cogroup", False], ids=["partition", "cogroup", "staged"]
-)
+@pytest.mark.parametrize("plan", list(PLANS))
 @pytest.mark.parametrize(
     "flags",
     [
@@ -67,9 +78,9 @@ def _compare(spark, transcripts, alt_rows, lexicon, fused=True, **flags):
     ],
     ids=["easy", "easy+sym", "full"],
 )
-def test_pipeline_byte_equality(spark, flags, fused):
+def test_pipeline_byte_equality(spark, flags, plan):
     transcripts, alt_rows, lexicon = make_fixture(n_convs=9)
-    _compare(spark, transcripts, alt_rows, lexicon, fused=fused, **flags)
+    _compare(spark, transcripts, alt_rows, lexicon, PLANS[plan], **flags)
 
 
 def test_mismatched_alt_grid_byte_equality(spark):
@@ -114,8 +125,8 @@ def test_mismatched_alt_grid_byte_equality(spark):
         r for r in alt_rows
         if (r["conv_id"], r["turn_idx"]) != drop
     ]
-    for fused in (True, "cogroup", False):
-        _compare(spark, transcripts, alt_rows, lexicon, fused=fused)
+    for plan in PLANS.values():
+        _compare(spark, transcripts, alt_rows, lexicon, plan)
 
 
 def test_nontimestamp_ts_column_all_plans(spark):
@@ -136,17 +147,15 @@ def test_nontimestamp_ts_column_all_plans(spark):
         alt_rows, schema="conv_id string, turn_idx int, text string"
     )
     outs = {}
-    for fused in (True, "cogroup", False):
-        outs[fused] = sorted(
+    for plan, kw in PLANS.items():
+        outs[plan] = sorted(
             map(
                 tuple,
-                correct_pipeline(
-                    spark, tdf, adf, lexicon, fused=fused
-                ).collect(),
+                correct_pipeline(spark, tdf, adf, lexicon, **kw).collect(),
             )
         )
-    assert outs[True] == outs["cogroup"] == outs[False]
-    assert len(outs[True]) == len(transcripts)
+    assert outs["partition"] == outs["cogroup"] == outs["staged"]
+    assert len(outs["partition"]) == len(transcripts)
 
 
 def test_pipeline_row_count_and_schema(spark):
@@ -192,10 +201,8 @@ def test_pipeline_handles_pathological_skew(spark):
     )
 
 
-@pytest.mark.parametrize(
-    "fused", [True, "cogroup", False], ids=["partition", "cogroup", "staged"]
-)
-def test_bigram_rerank_mode_equality(spark, fused):
+@pytest.mark.parametrize("plan", list(PLANS))
+def test_bigram_rerank_mode_equality(spark, plan):
     """Bigram-context reranking mode: Spark output byte-equals the oracle
     in all three physical plans, and the context actually changes at
     least one correction vs plain TOP mode."""
@@ -208,7 +215,7 @@ def test_bigram_rerank_mode_equality(spark, fused):
     }
     _compare(
         spark, transcripts, alt_rows, lexicon,
-        fused=fused, bigram_pairs=bigrams,
+        PLANS[plan], bigram_pairs=bigrams,
     )
 
 
@@ -263,10 +270,9 @@ def test_easy_only_mode_needs_no_lexicon(spark):
     proves no code path touches it in any plan."""
     transcripts, _alt, _lex = make_fixture(n_convs=3)
     tdf, _ = _to_dfs(spark, transcripts, [])
-    for fused in (True, "cogroup", False):
+    for kw in PLANS.values():
         out = correct_pipeline(
-            spark, tdf, None, None,
-            do_hard=False, do_sym=False, fused=fused,
+            spark, tdf, None, None, do_hard=False, do_sym=False, **kw
         )
         assert out.count() == len(transcripts)
 
@@ -284,7 +290,7 @@ def test_skew_routed_auto_plan_equality(spark):
     assert min(lens.values()) <= thr < max(lens.values())
     _compare(
         spark, transcripts, alt_rows, lexicon,
-        fused="auto", long_conv_threshold=thr,
+        {"fused": "auto", "long_conv_threshold": thr},
     )
 
 
@@ -336,17 +342,15 @@ def test_skew_router_null_conv_id_not_dropped(spark, null_is_whale):
     assert got == want  # nothing dropped from either branch, bytes equal
 
 
-@pytest.mark.parametrize(
-    "fused", [True, "cogroup"], ids=["partition", "cogroup"]
-)
-def test_per_conv_augmentation_equality(spark, fused):
+@pytest.mark.parametrize("plan", ["partition", "cogroup"])
+def test_per_conv_augmentation_equality(spark, plan):
     """Per-conversation dictionary augmentation (correct_ocr.py:210-229
     production mode): Spark output byte-equals the oracle in both
     conv-grouped plans."""
     transcripts, alt_rows, lexicon = make_fixture(n_convs=4)
     _compare(
         spark, transcripts, alt_rows, lexicon,
-        fused=fused, augment_per_conv=(2, 250),
+        PLANS[plan], augment_per_conv=(2, 250),
     )
 
 
@@ -375,12 +379,71 @@ def test_per_conv_augmentation_rescues_conv_word(spark):
     assert got_rare == ["hus dag"]
 
 
+def test_correct_turns_shared_memos_match_fresh():
+    """Memos shared across conversations (the partition walk keeps them
+    per partition) give the same bytes as fresh memos per conversation,
+    and both equal the oracle's independent composition."""
+    from memo_fraktur_ocr_code_spark.functions.symspell import SymSpellIndex
+    from memo_fraktur_ocr_code_spark.oracle.spec import correct_conversation
+
+    lex = [("hus", 100), ("dag", 90), ("mur", 80), ("mand", 70)]
+    idx = SymSpellIndex.from_pairs(lex)
+    guard = frozenset(t for t, _c in lex)
+    convs = [
+        (["hux dag", "tyste mand", "mur til-", "bage hux"],
+         ["hus dag", "tyske mand", "mur til-", "bage hus"]),
+        (["tyste mand", "hux dag", None, "daq mvr"],
+         ["tyske mand", "hus dag", "", "dag mur"]),
+    ]
+    shared = ({}, {}, {})
+    for texts, alts in convs:
+        args = (texts, alts, True, guard, idx, None, None)
+        got_shared = correct_turns(*args, shared)
+        got_fresh = correct_turns(*args, ({}, {}, {}))
+        want = correct_conversation(
+            [t or "" for t in texts], alts, idx, guard
+        )
+        assert got_shared == got_fresh == want
+    assert all(shared)  # every cache was actually populated and reused
+
+
+@pytest.mark.parametrize("order", ["freq-first", "rare-first"])
+def test_correct_turns_augment_suggestions_are_conv_scoped(order):
+    """In augment mode a token frequent in one conversation is kept
+    there and corrected in a conversation where it is rare — even when
+    both calls share one memo tuple, in either order."""
+    from memo_fraktur_ocr_code_spark.functions.symspell import SymSpellIndex
+
+    lex = [("hus", 100), ("dag", 90), ("mur", 80)]
+    idx = SymSpellIndex.from_pairs(lex)
+    freq = ["hux dag", "hux mur", "hux dag"]
+    rare = ["hux dag"]
+    convs = [freq, rare] if order == "freq-first" else [rare, freq]
+    memos = ({}, {}, {})
+    out = {
+        id(texts): correct_turns(
+            texts, None, True, None, idx, None, (2, 250), memos
+        )
+        for texts in convs
+    }
+    assert all(t.startswith("hux") for t in out[id(freq)]), out[id(freq)]
+    assert out[id(rare)] == ["hus dag"]
+
+
+def test_fused_rejects_unknown_plan(spark):
+    transcripts, alt_rows, lexicon = make_fixture(n_convs=2)
+    tdf, adf = _to_dfs(spark, transcripts, alt_rows)
+    for fused in (False, "staged", None):
+        with pytest.raises(ValueError, match="fused must be"):
+            correct_pipeline(spark, tdf, adf, lexicon, fused=fused)
+
+
 def test_augment_mode_guards(spark):
     transcripts, alt_rows, lexicon = make_fixture(n_convs=2)
     tdf, adf = _to_dfs(spark, transcripts, alt_rows)
     with pytest.raises(ValueError, match="conv-grouped"):
         correct_pipeline(
-            spark, tdf, adf, lexicon, fused=False, augment_per_conv=True
+            spark, tdf, adf, lexicon, fused="auto", augment_per_conv=True
         )
     with pytest.raises(ValueError, match="rerank"):
         correct_pipeline(

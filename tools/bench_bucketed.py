@@ -6,12 +6,15 @@ tests/test_bucketed.py asserts it); this script puts a wall-clock
 number on that elision, plus the one-off ingest cost it amortizes.
 
 Usage: python tools/bench_bucketed.py [replication] [cpus]
-Prints one JSON line; quoted in BENCH.md.
+``cpus`` defaults to the cores this process may run on (``nproc``); asking
+for more exits with an error, since extra local threads would only
+time-share the same cores.  Prints one JSON line; quoted in BENCH.md.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import time
@@ -25,7 +28,10 @@ ROOT = "/tmp/memo_bench_bucketed"
 
 def main() -> None:
     factor = int(sys.argv[1]) if len(sys.argv) > 1 else 12
-    cpus = int(sys.argv[2]) if len(sys.argv) > 2 else 8
+    nproc = len(os.sched_getaffinity(0))
+    cpus = int(sys.argv[2]) if len(sys.argv) > 2 else nproc
+    if cpus > nproc:
+        raise SystemExit(f"asked for {cpus} cpus, but nproc is {nproc}")
 
     import __spark_entry__ as entry
     from memo_fraktur_ocr_code_spark.plans.pipeline import correct_pipeline
